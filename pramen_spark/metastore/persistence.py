@@ -19,6 +19,11 @@ partition column so Catalyst prunes partitions; single-date reads go
 straight to the partition directory (skips listing + schema merge of the
 full dataset). Writes repartition by PartitionInfo so output file count is
 controlled (records-per-partition sizing rather than task-count artifacts).
+
+Every write counts its rows while writing (``write_counted``): the
+published count comes from the write job itself, so a save runs the
+upstream plan once. Only records-per-partition sizing counts first, since
+it needs the number before the write starts.
 """
 
 from __future__ import annotations
@@ -28,9 +33,9 @@ import math
 import os
 import shutil
 from dataclasses import dataclass
-from typing import Dict, List, Optional, Tuple
+from typing import Callable, Dict, List, Optional, Tuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -51,18 +56,39 @@ class WriteResult:
     size_bytes: Optional[int] = None
 
 
-def apply_repartitioning(df: DataFrame, info: PartitionInfo, record_count: int) -> DataFrame:
+def repartition_by_records(
+    df: DataFrame, records_per_partition: int, prefer_coalesce: bool = False
+) -> DataFrame:
+    """One output partition per ``records_per_partition`` rows. The only
+    count that runs before a write: the partition count depends on it."""
+    n = max(1, math.ceil(df.count() / records_per_partition))
+    return df.coalesce(n) if prefer_coalesce else df.repartition(n)
+
+
+def apply_repartitioning(df: DataFrame, info: PartitionInfo) -> DataFrame:
     """PartitionInfo -> repartition/coalesce
     (MetastorePersistenceParquet companion applyPartitioning;
     pramen-py/src/pramen_py/metastore/writer.py:108-119)."""
     if info.kind == "explicit" and info.num_partitions:
         return df.repartition(info.num_partitions)
     if info.kind == "per_record_count" and info.records_per_partition:
-        n = max(1, math.ceil(record_count / info.records_per_partition))
-        if info.prefer_coalesce:
-            return df.coalesce(n)
-        return df.repartition(n)
+        return repartition_by_records(df, info.records_per_partition, info.prefer_coalesce)
     return df
+
+
+def write_counted(df: DataFrame, write: Callable[[DataFrame], None]) -> int:
+    """Run ``write`` on ``df`` and return the rows it wrote, counted by an
+    ``Observation`` on the write job itself: one pass over the upstream
+    plan, exact under append (a re-read would include older rows) and for
+    an empty input.
+
+    Call it after any repartition or coalesce, and build nothing on the
+    DataFrame ``write`` receives but the writer: Catalyst may prune an
+    observe node that sits under a later ``limit``, an always-false filter
+    or a shuffle of an empty relation, and the count then fails."""
+    obs = Observation()
+    write(df.observe(obs, F.count(F.lit(1)).alias("rows")))
+    return int(obs.get["rows"])
 
 
 def _dir_size(path: str) -> int:
@@ -96,6 +122,11 @@ class MetastorePersistence:
 
     # --- shared helpers ---
 
+    @property
+    def path(self) -> str:
+        assert self.table.format.path, f"Table {self.table.name} has no path"
+        return self.table.format.path
+
     def _range_filter(self, df: DataFrame, date_from: Optional[_dt.date], date_to: Optional[_dt.date]) -> DataFrame:
         col = self.table.info_date_column
         if date_from is not None and date_to is not None:
@@ -114,16 +145,29 @@ class MetastorePersistence:
         return df
 
 
-class ParquetPersistence(MetastorePersistence):
-    """Directory-per-info-date parquet dataset."""
-
-    @property
-    def path(self) -> str:
-        assert self.table.format.path, f"Table {self.table.name} has no path"
-        return self.table.format.path
+class DirectoryPerDatePersistence(MetastorePersistence):
+    """One ``path/{col}={date}`` directory per info date; the available
+    dates are the directory names."""
 
     def partition_dir(self, info_date: _dt.date) -> str:
         return os.path.join(self.path, f"{self.table.info_date_column}={info_date.isoformat()}")
+
+    def get_available_dates(self) -> List[_dt.date]:
+        prefix = f"{self.table.info_date_column}="
+        dates: List[_dt.date] = []
+        if not os.path.isdir(self.path):
+            return dates
+        for entry in os.listdir(self.path):
+            if entry.startswith(prefix):
+                try:
+                    dates.append(_dt.date.fromisoformat(entry[len(prefix) :]))
+                except ValueError:
+                    pass
+        return sorted(dates)
+
+
+class ParquetPersistence(DirectoryPerDatePersistence):
+    """Directory-per-info-date parquet dataset."""
 
     def load_table(
         self, info_date_from: Optional[_dt.date], info_date_to: Optional[_dt.date]
@@ -151,29 +195,15 @@ class ParquetPersistence(MetastorePersistence):
         save_mode = self.table.save_mode or "overwrite"
         if self.table.info_date_column in df.columns:
             df = df.drop(self.table.info_date_column)
-        count = df.count()
-        df = apply_repartitioning(df, self.table.format.partition_info, count)
-        writer = df.write.mode(save_mode)
-        for k, v in self.table.write_options.items():
-            writer = writer.option(k, v)
-        writer.parquet(out_dir)
+        df = apply_repartitioning(df, self.table.format.partition_info)
+        count = write_counted(
+            df, lambda d: d.write.mode(save_mode).options(**self.table.write_options).parquet(out_dir)
+        )
         total = count
         if save_mode == "append":
+            # control read: the partition total, older files included
             total = self.spark.read.parquet(out_dir).count()
         return WriteResult(records=total, records_appended=count, size_bytes=_dir_size(out_dir))
-
-    def get_available_dates(self) -> List[_dt.date]:
-        prefix = f"{self.table.info_date_column}="
-        dates: List[_dt.date] = []
-        if not os.path.isdir(self.path):
-            return dates
-        for entry in os.listdir(self.path):
-            if entry.startswith(prefix):
-                try:
-                    dates.append(_dt.date.fromisoformat(entry[len(prefix) :]))
-                except ValueError:
-                    pass
-        return sorted(dates)
 
     def delete_partition(self, info_date: _dt.date) -> None:
         d = self.partition_dir(info_date)
@@ -186,11 +216,6 @@ class DeltaPersistence(MetastorePersistence):
 
     Partition schemes add generated month/year columns before partitioning
     (MetastorePersistenceDelta.scala:91-115)."""
-
-    @property
-    def path(self) -> str:
-        assert self.table.format.path, f"Table {self.table.name} has no path"
-        return self.table.format.path
 
     def _with_generated_partitions(self, df: DataFrame) -> Tuple[DataFrame, List[str]]:
         col = self.table.info_date_column
@@ -217,24 +242,21 @@ class DeltaPersistence(MetastorePersistence):
     def save_table(self, df: DataFrame, info_date: _dt.date) -> WriteResult:
         col = self.table.info_date_column
         df = df.withColumn(col, F.lit(info_date.isoformat()).cast(T.DateType()))
-        count = df.count()
-        df = apply_repartitioning(df, self.table.format.partition_info, count)
+        df = apply_repartitioning(df, self.table.format.partition_info)
         df, part_cols = self._with_generated_partitions(df)
         save_mode = (self.table.save_mode or "overwrite").lower()
-        writer = (
-            df.write.format("delta")
-            .mode(save_mode)
-            .option("mergeSchema", "true")
-        )
-        # replaceWhere only combines with overwrite mode; Delta rejects it on
-        # append (MetastorePersistenceDelta.scala:128-129 gates the same way).
-        if save_mode == "overwrite" and self.table.partition_scheme != PartitionScheme.OVERWRITE:
-            writer = writer.option("replaceWhere", f"{col} = '{info_date.isoformat()}'")
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-        for k, v in self.table.write_options.items():
-            writer = writer.option(k, v)
-        writer.save(self.path)
+
+        def write(out: DataFrame) -> None:
+            writer = out.write.format("delta").mode(save_mode).option("mergeSchema", "true")
+            # replaceWhere only combines with overwrite mode; Delta rejects it on
+            # append (MetastorePersistenceDelta.scala:128-129 gates the same way).
+            if save_mode == "overwrite" and self.table.partition_scheme != PartitionScheme.OVERWRITE:
+                writer = writer.option("replaceWhere", f"{col} = '{info_date.isoformat()}'")
+            if part_cols:
+                writer = writer.partitionBy(*part_cols)
+            writer.options(**self.table.write_options).save(self.path)
+
+        count = write_counted(df, write)
         return WriteResult(records=count, records_appended=count)
 
     def get_available_dates(self) -> List[_dt.date]:
@@ -287,21 +309,22 @@ class IcebergPersistence(MetastorePersistence):
     def save_table(self, df: DataFrame, info_date: _dt.date) -> WriteResult:
         col = self.table.info_date_column
         df = df.withColumn(col, F.lit(info_date.isoformat()).cast(T.DateType()))
-        count = df.count()
-        df = apply_repartitioning(df, self.table.format.partition_info, count)
-        exists = self.spark.catalog.tableExists(self.table_name)
-        if not exists:
-            self._ensure_table(df)
-            return WriteResult(records=count, records_appended=count)
-        if self.table.save_mode == "append":
-            df.writeTo(self.table_name).append()
-        elif self.table.partition_scheme == PartitionScheme.OVERWRITE:
-            df.writeTo(self.table_name).replace()
-        else:
-            # overwrite exactly this info date's partition
-            df.writeTo(self.table_name).overwrite(
-                F.col(col) == F.lit(info_date.isoformat()).cast(T.DateType())
-            )
+        df = apply_repartitioning(df, self.table.format.partition_info)
+
+        def write(out: DataFrame) -> None:
+            if not self.spark.catalog.tableExists(self.table_name):
+                self._ensure_table(out)
+            elif self.table.save_mode == "append":
+                out.writeTo(self.table_name).append()
+            elif self.table.partition_scheme == PartitionScheme.OVERWRITE:
+                out.writeTo(self.table_name).replace()
+            else:
+                # overwrite exactly this info date's partition
+                out.writeTo(self.table_name).overwrite(
+                    F.col(col) == F.lit(info_date.isoformat()).cast(T.DateType())
+                )
+
+        count = write_counted(df, write)
         return WriteResult(records=count, records_appended=count)
 
     def get_available_dates(self) -> List[_dt.date]:
@@ -310,17 +333,9 @@ class IcebergPersistence(MetastorePersistence):
         return sorted(r[0] for r in rows if r[0] is not None)
 
 
-class RawPersistence(MetastorePersistence):
+class RawPersistence(DirectoryPerDatePersistence):
     """Files copied verbatim into per-date dirs; reads return a DataFrame of
     ``[path, file_name]`` (MetastorePersistenceRaw.scala:57-134)."""
-
-    @property
-    def path(self) -> str:
-        assert self.table.format.path, f"Table {self.table.name} has no path"
-        return self.table.format.path
-
-    def partition_dir(self, info_date: _dt.date) -> str:
-        return os.path.join(self.path, f"{self.table.info_date_column}={info_date.isoformat()}")
 
     def _list_files(self, d: str) -> List[Tuple[str, str]]:
         if not os.path.isdir(d):
@@ -361,19 +376,6 @@ class RawPersistence(MetastorePersistence):
             shutil.copy2(p, os.path.join(out_dir, os.path.basename(p)))
             total += 1
         return WriteResult(records=total, size_bytes=_dir_size(out_dir))
-
-    def get_available_dates(self) -> List[_dt.date]:
-        prefix = f"{self.table.info_date_column}="
-        dates: List[_dt.date] = []
-        if not os.path.isdir(self.path):
-            return dates
-        for entry in os.listdir(self.path):
-            if entry.startswith(prefix):
-                try:
-                    dates.append(_dt.date.fromisoformat(entry[len(prefix) :]))
-                except ValueError:
-                    pass
-        return sorted(dates)
 
 
 class TransientTableManager:

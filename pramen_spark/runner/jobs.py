@@ -8,8 +8,10 @@ Reference mapping (core/.../pipeline/*):
   transformations, filters, projection, sink.send)
 - pre-run check outcomes  <- IngestionJob.scala:71-140
 
-Jobs return lazy DataFrames; the single Spark action happens in ``save``
-(metastore write) — the Catalyst plan covers source-to-storage.
+Jobs return lazy DataFrames; ``save`` runs them. Metastore and sink
+writes count their rows on the write itself (``persistence.write_counted``),
+so the Catalyst plan covers source-to-storage and runs once; only
+records-per-partition sizing counts before writing.
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ from pramen_spark.api import Reason, Sink, Source, Transformer
 from pramen_spark.config.models import OperationDef, TableConfig
 from pramen_spark.dsl.dateexpr import DateExprEvaluator
 from pramen_spark.metastore.metastore import Metastore
+from pramen_spark.metastore.persistence import WriteResult
 from pramen_spark.runner.bookkeeper import Bookkeeper
 
 
@@ -101,6 +104,16 @@ class SourceCacheMixin:
         )
         return str(v).lower() == "true"
 
+    def _source_record_count(self, date_from: _dt.date, date_to: _dt.date) -> Optional[int]:
+        """Records at the source for the date range; ``None`` when the
+        source cannot count them."""
+        try:
+            if self._count_query_disabled():
+                return self._cached_source_data(date_from, date_to).count()
+            return self.source.get_record_count(self.source_query, date_from, date_to)
+        except NotImplementedError:
+            return None
+
     def _cached_source_data(self, date_from: _dt.date, date_to: _dt.date) -> DataFrame:
         """Read-through cache keyed by (job, query, date range), persisted
         to the metastore temp dir so the count and the subsequent save
@@ -174,14 +187,8 @@ class IngestionJob(SourceCacheMixin, Job):
             fail_if_no_data = fail_if_no_data or self._channel_flag(
                 "fail.if.no.new.data"
             )
-        try:
-            if self._count_query_disabled():
-                count = self._cached_source_data(date_from, date_to).count()
-            else:
-                count = self.source.get_record_count(
-                    self.source_query, date_from, date_to
-                )
-        except NotImplementedError:
+        count = self._source_record_count(date_from, date_to)
+        if count is None:
             return JobPreRunResult(JobPreRunStatus.READY)
 
         chunk = self.bookkeeper.get_latest_data_chunk(self.output_table.name, info_date)
@@ -241,7 +248,21 @@ class TransformationJob(Job):
         return result
 
 
-class SinkJob(Job):
+class SendToSinkMixin:
+    """``save`` for jobs that end in a sink: connect, send, close. The
+    sink's returned count is the task's record count. Subclasses set
+    ``sink`` and ``sink_table_name`` (the table name the sink receives)."""
+
+    def save(self, df: DataFrame, info_date: _dt.date) -> WriteResult:
+        self.sink.connect()
+        try:
+            sent = self.sink.send(df, self.sink_table_name, info_date, self.operation.options)
+        finally:
+            self.sink.close()
+        return WriteResult(records=sent)
+
+
+class SinkJob(SendToSinkMixin, Job):
     """Metastore table -> sink (SinkJob.scala:63-180). The row-level
     decorations (transformations/filters/projection) are applied by the
     task runner before ``save``/``send``."""
@@ -258,21 +279,11 @@ class SinkJob(Job):
         super().__init__(operation, metastore, bookkeeper, output_table)
         self.sink = sink
         self.input_table = input_table
+        self.sink_table_name = input_table
 
     def run(self, info_date: _dt.date) -> DataFrame:
         date_from, date_to = self.get_info_date_range(info_date)
         return self.metastore.get_table(self.input_table, date_from, date_to)
-
-    def save(self, df: DataFrame, info_date: _dt.date):
-        self.sink.connect()
-        try:
-            sent = self.sink.send(df, self.input_table, info_date, self.operation.options)
-        finally:
-            self.sink.close()
-
-        from pramen_spark.metastore.persistence import WriteResult
-
-        return WriteResult(records=sent)
 
 
 class PythonFunctionJob(Job):
@@ -294,7 +305,7 @@ class PythonFunctionJob(Job):
         return self.fn(reader, info_date)
 
 
-class TransferJob(SourceCacheMixin, Job):
+class TransferJob(SourceCacheMixin, SendToSinkMixin, Job):
     """Source -> sink directly, without persisting in the metastore
     (core/.../pipeline/TransferJob.scala). The output table is a virtual
     name used only for bookkeeping/locking. disable.count.query behaves
@@ -315,19 +326,14 @@ class TransferJob(SourceCacheMixin, Job):
         self.source = source
         self.source_query = source_query
         self.sink = sink
+        self.sink_table_name = output_table.name
 
     def pre_run_check(
         self, info_date: _dt.date, run_reason=None
     ) -> JobPreRunResult:
         date_from, date_to = self.get_info_date_range(info_date)
-        try:
-            if self._count_query_disabled():
-                count = self._cached_source_data(date_from, date_to).count()
-            else:
-                count = self.source.get_record_count(
-                    self.source_query, date_from, date_to
-                )
-        except NotImplementedError:
+        count = self._source_record_count(date_from, date_to)
+        if count is None:
             return JobPreRunResult(JobPreRunStatus.READY)
         if count == 0:
             fail = str(self.operation.options.get("fail.if.no.data", "false")).lower() == "true"
@@ -342,14 +348,3 @@ class TransferJob(SourceCacheMixin, Job):
         if self._count_query_disabled():
             return self._cached_source_data(date_from, date_to)
         return self.source.get_data(self.source_query, date_from, date_to)
-
-    def save(self, df: DataFrame, info_date: _dt.date):
-        self.sink.connect()
-        try:
-            sent = self.sink.send(df, self.output_table.name, info_date, self.operation.options)
-        finally:
-            self.sink.close()
-
-        from pramen_spark.metastore.persistence import WriteResult
-
-        return WriteResult(records=sent)

@@ -17,6 +17,7 @@ from typing import Any, Dict
 from pyspark.sql import DataFrame
 
 from pramen_spark.api import Sink
+from pramen_spark.metastore.persistence import write_counted
 
 
 class CmdLineSink(Sink):
@@ -37,11 +38,15 @@ class CmdLineSink(Sink):
         if not cmd_template:
             raise ValueError("CmdLineSink requires the 'cmd.line' option")
 
-        count = df.count()
         data_path = ""
         if opts.get("format"):
             data_path = tempfile.mkdtemp(prefix="cmd_sink_")
-            df.write.mode("overwrite").format(opts["format"]).save(data_path)
+            count = write_counted(
+                df, lambda d: d.write.mode("overwrite").format(opts["format"]).save(data_path)
+            )
+        else:
+            # nothing is written, so the count is the only Spark action
+            count = df.count()
 
         cmd = (
             cmd_template.replace("@infoDate", info_date.isoformat())

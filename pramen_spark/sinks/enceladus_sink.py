@@ -21,6 +21,7 @@ from typing import Any, Dict, Optional
 from pyspark.sql import DataFrame
 
 from pramen_spark.api import Sink
+from pramen_spark.metastore.persistence import write_counted
 
 
 def partition_path(
@@ -118,15 +119,13 @@ class EnceladusSink(Sink):
         version = int(merged.get("version", 0)) or detect_next_version(
             base_path, info_date, pattern
         )
-        count = df.count()
-        if count == 0 and not merged.get("save.empty", True):
+        if not merged.get("save.empty", True) and df.isEmpty():
             return 0
         out_path = partition_path(base_path, info_date, version, pattern)
-        writer = df.write.mode("overwrite").format(fmt)
-        for k, v in merged.items():
-            if k.startswith("option."):
-                writer = writer.option(k[len("option.") :], v)
-        writer.save(out_path)
+        writer_opts = {k[len("option.") :]: v for k, v in merged.items() if k.startswith("option.")}
+        count = write_counted(
+            df, lambda d: d.write.mode("overwrite").format(fmt).options(**writer_opts).save(out_path)
+        )
         if merged.get("info.file.generate", True):
             info = build_info_file(table_name, info_date, version, count)
             with open(os.path.join(out_path, "_INFO"), "w") as f:

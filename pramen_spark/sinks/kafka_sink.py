@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pramen_spark.api import Sink
+from pramen_spark.metastore.persistence import write_counted
 from pramen_spark.sources.kafka_source import kafka_available
 
 
@@ -66,20 +67,18 @@ class KafkaSink(Sink):
                 "The spark-sql-kafka connector is not on the classpath; add "
                 "org.apache.spark:spark-sql-kafka-0-10_2.13 to spark.jars.packages"
             )
-        count = df.count()
         out = serialize_for_kafka(
             df,
             merged.get("payload.format", "json"),
             merged.get("key.column"),
             merged.get("avro.schema"),
         )
-        writer = (
-            out.write.format("kafka")
+        writer_opts = {k[len("option.") :]: v for k, v in merged.items() if k.startswith("option.")}
+        return write_counted(
+            out,
+            lambda d: d.write.format("kafka")
             .option("kafka.bootstrap.servers", merged["kafka.bootstrap.servers"])
             .option("topic", merged["topic"])
+            .options(**writer_opts)
+            .save(),
         )
-        for k, v in merged.items():
-            if k.startswith("option."):
-                writer = writer.option(k[len("option.") :], v)
-        writer.save()
-        return count

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pramen_spark.api import Sink
+from pramen_spark.metastore.persistence import write_counted
 from pramen_spark.operators.sampling import assign_shards
 
 
@@ -38,27 +39,18 @@ def write_training_shards(
     mode: str = "overwrite",
 ) -> int:
     """Assign shards and write ``path/shard_id=K/`` parquet directories.
-    Returns the number of rows THIS call wrote, counted by an
-    ``Observation`` attached to the write itself — one pass, exact under
-    ``mode='append'`` (a re-read would include pre-existing rows) and for
-    an empty input (a re-read of zero files cannot infer a schema)."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
+    Returns the number of rows THIS call wrote, counted on the write
+    itself (``write_counted``), so ``mode='append'`` and an empty input
+    count exactly."""
     sharded = assign_shards(df, n_shards, key_col=key_col, shard_col=shard_col)
-    writer = (
-        # observe AFTER the repartition: on an empty input AQE prunes the
-        # pre-shuffle side and an upstream observe node never fires,
-        # making obs.get fail; here the node always executes
-        sharded.repartition(n_shards, F.col(shard_col))
-        .observe(obs, F.count(F.lit(1)).alias("rows_written"))
-        .write.mode(mode)
-        .partitionBy(shard_col)
-    )
-    if max_records_per_file is not None:
-        writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
-    writer.parquet(path)
-    return int(obs.get["rows_written"])
+
+    def write(out: DataFrame) -> None:
+        writer = out.write.mode(mode).partitionBy(shard_col)
+        if max_records_per_file is not None:
+            writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
+        writer.parquet(path)
+
+    return write_counted(sharded.repartition(n_shards, F.col(shard_col)), write)
 
 
 class ShardSink(Sink):

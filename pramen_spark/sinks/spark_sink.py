@@ -8,12 +8,12 @@ sizing at SparkSink.scala:53-54).
 from __future__ import annotations
 
 import datetime as _dt
-import math
 from typing import Any, Dict
 
 from pyspark.sql import DataFrame
 
 from pramen_spark.api import Sink
+from pramen_spark.metastore.persistence import repartition_by_records, write_counted
 
 
 class SparkSink(Sink):
@@ -30,9 +30,8 @@ class SparkSink(Sink):
         opts = {**self.options, **options}
         fmt = opts.get("format", "parquet")
         mode = opts.get("mode", "overwrite")
-        count = df.count()
 
-        if count == 0 and str(opts.get("save.empty", "true")).lower() != "true":
+        if str(opts.get("save.empty", "true")).lower() != "true" and df.isEmpty():
             return 0
 
         n_partitions = opts.get("number.of.partitions")
@@ -40,23 +39,24 @@ class SparkSink(Sink):
         if n_partitions is not None:
             df = df.repartition(int(n_partitions))
         elif rpp is not None:
-            df = df.repartition(max(1, math.ceil(count / int(rpp))))
+            df = repartition_by_records(df, int(rpp))
 
-        writer = df.write.format(fmt).mode(mode)
-        if opts.get("partition.by"):
-            cols = [c.strip() for c in str(opts["partition.by"]).split(",") if c.strip()]
-            writer = writer.partitionBy(*cols)
-        for k, v in opts.items():
-            if k.startswith("option."):
-                writer = writer.option(k[len("option.") :], v)
-
-        if "path" in opts:
-            path = opts["path"]
-            if str(opts.get("partition.by.info.date", "false")).lower() == "true":
-                path = f"{path}/{info_date.isoformat()}"
-            writer.save(path)
-        elif "table" in opts:
-            writer.saveAsTable(opts["table"])
-        else:
+        path = opts.get("path")
+        if path is None and "table" not in opts:
             raise ValueError("SparkSink requires 'path' or 'table' option")
-        return count
+        if path is not None and str(opts.get("partition.by.info.date", "false")).lower() == "true":
+            path = f"{path}/{info_date.isoformat()}"
+
+        part_cols = [c.strip() for c in str(opts.get("partition.by", "")).split(",") if c.strip()]
+        writer_opts = {k[len("option.") :]: v for k, v in opts.items() if k.startswith("option.")}
+
+        def write(out: DataFrame) -> None:
+            writer = out.write.format(fmt).mode(mode).options(**writer_opts)
+            if part_cols:
+                writer = writer.partitionBy(*part_cols)
+            if path is not None:
+                writer.save(path)
+            else:
+                writer.saveAsTable(opts["table"])
+
+        return write_counted(df, write)

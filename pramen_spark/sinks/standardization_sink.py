@@ -21,13 +21,13 @@ from __future__ import annotations
 
 import datetime as _dt
 import json
-import math
 import os
 from typing import Any, Dict, Optional
 
 from pyspark.sql import DataFrame, functions as F
 
 from pramen_spark.api import Sink
+from pramen_spark.metastore.persistence import repartition_by_records, write_counted
 from pramen_spark.sinks.enceladus_sink import build_info_file
 
 DEFAULT_RAW_PATTERN = "{year}/{month}/{day}/v{version}"
@@ -107,14 +107,15 @@ class StandardizationSink(Sink):
             else [date_col]
         )
 
-        source_count = df.count()
         rpp = merged.get("records.per.partition")
         if rpp:
-            df = df.repartition(max(1, math.ceil(source_count / int(rpp))))
+            df = repartition_by_records(df, int(rpp))
         decorated = self._add_extra_fields(df, info_date, version, merged)
 
+        # The source count is taken on the first write of the source rows:
+        # the raw layer when there is one, else the publish layer. The raw
+        # and publish counts are control values read back after each write.
         spark = df.sparkSession
-        raw_count = source_count
         raw_df = decorated
         raw_base = merged.get("raw.base.path")
         if raw_base:
@@ -124,7 +125,10 @@ class StandardizationSink(Sink):
                 render_partition_pattern(raw_pattern, info_date, version, date_col, ver_col),
             )
             raw_fmt = merged.get("raw.format", "json")
-            decorated.drop(*partition_by).write.mode("overwrite").format(raw_fmt).save(raw_path)
+            source_count = write_counted(
+                decorated.drop(*partition_by),
+                lambda d: d.write.mode("overwrite").format(raw_fmt).save(raw_path),
+            )
             raw_df = self._add_extra_fields(
                 spark.read.format(raw_fmt).load(raw_path), info_date, version, merged
             )
@@ -141,13 +145,14 @@ class StandardizationSink(Sink):
             replace_where = f"{date_col}='{info_date.isoformat()}'"
             if ver_col in partition_by:
                 replace_where += f" AND {ver_col}={version}"
-            (
-                raw_df.write.format("delta")
+            written = write_counted(
+                raw_df,
+                lambda d: d.write.format("delta")
                 .mode("overwrite")
                 .partitionBy(*partition_by)
                 .option("mergeSchema", "true")
                 .option("replaceWhere", replace_where)
-                .save(publish_base)
+                .save(publish_base),
             )
             publish_count = (
                 spark.read.format("delta")
@@ -157,9 +162,13 @@ class StandardizationSink(Sink):
             )
             info_dir = publish_base
         else:
-            raw_df.drop(*partition_by).write.mode("overwrite").parquet(publish_path)
+            written = write_counted(
+                raw_df.drop(*partition_by), lambda d: d.write.mode("overwrite").parquet(publish_path)
+            )
             publish_count = spark.read.parquet(publish_path).count()
             info_dir = publish_path
+        if not raw_base:
+            source_count = raw_count = written
         self._write_info_file(info_dir, table_name, info_date, version,
                               source_count, raw_count, publish_count, merged)
         return publish_count

@@ -25,6 +25,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from pramen_spark.config.models import TableConfig
+from pramen_spark.metastore.schema_cache import read_parquet
 
 
 def escape_identifier(name: str) -> str:
@@ -99,10 +100,11 @@ def sync_catalog(
     if exists and not force_recreate:
         repair_table(spark, name)
         return name
-    df = (
-        spark.read.option("basePath", table.format.path)
-        .option("mergeSchema", "true")  # union schema across partitions, not one sampled file
-        .parquet(table.format.path)
+    df = read_parquet(
+        spark,
+        table.format.path,
+        # union schema across partitions, not one sampled file
+        {"basePath": table.format.path, "mergeSchema": "true"},
     )
     cat_schema = transform_schema_for_catalog(df.schema)
     part_col = table.info_date_column

@@ -20,6 +20,12 @@ straight to the partition directory (skips listing + schema merge of the
 full dataset). Writes repartition by PartitionInfo so output file count is
 controlled (records-per-partition sizing rather than task-count artifacts).
 
+Parquet reads take their schema from ``schema_cache`` instead of
+inferring it, which costs a Spark job per read. An overwrite of a
+partition stores the schema it wrote there, so the next task's read of
+that partition runs no Spark job until the plan executes. The cache is
+keyed on the partition's files: any rewrite makes the next read infer.
+
 Every write counts its rows while writing (``write_counted``): the
 published count comes from the write job itself, so a save runs the
 upstream plan once. Only records-per-partition sizing counts first, since
@@ -47,6 +53,7 @@ from pramen_spark.config.models import (
     PartitionScheme,
     TableConfig,
 )
+from pramen_spark.metastore.schema_cache import as_nullable, read_parquet, remember
 
 
 @dataclass
@@ -180,12 +187,12 @@ class ParquetPersistence(DirectoryPerDatePersistence):
             and info_date_from == info_date_to
             and os.path.isdir(self.partition_dir(info_date_from))
         ):
-            df = self.spark.read.parquet(self.partition_dir(info_date_from))
+            df = read_parquet(self.spark, self.partition_dir(info_date_from))
             return df.withColumn(
                 self.table.info_date_column,
                 F.lit(info_date_from.isoformat()).cast(T.DateType()),
             )
-        df = self.spark.read.option("basePath", self.path).parquet(self.path)
+        df = read_parquet(self.spark, self.path, {"basePath": self.path})
         return self._range_filter(df, info_date_from, info_date_to)
 
     def save_table(self, df: DataFrame, info_date: _dt.date) -> WriteResult:
@@ -202,7 +209,10 @@ class ParquetPersistence(DirectoryPerDatePersistence):
         total = count
         if save_mode == "append":
             # control read: the partition total, older files included
-            total = self.spark.read.parquet(out_dir).count()
+            total = read_parquet(self.spark, out_dir).count()
+        elif save_mode == "overwrite":
+            # every file under out_dir is from this write: its schema is known
+            remember(self.spark, out_dir, df.schema)
         return WriteResult(records=total, records_appended=count, size_bytes=_dir_size(out_dir))
 
     def delete_partition(self, info_date: _dt.date) -> None:
@@ -404,7 +414,7 @@ class TransientTableManager:
             assert self.temp_dir, "PERSIST cache policy needs a temp dir"
             path = os.path.join(self.temp_dir, f"transient_{name}_{info_date.isoformat()}")
             df.write.mode("overwrite").parquet(path)
-            df = self.spark.read.parquet(path)
+            df = self.spark.read.schema(as_nullable(df.schema)).parquet(path)
         self._tables[self._key(name, info_date)] = df
 
     def has_table(self, name: str, info_date: _dt.date) -> bool:

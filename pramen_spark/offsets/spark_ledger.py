@@ -32,6 +32,7 @@ from typing import List
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
+from pramen_spark.metastore.schema_cache import load_with_schema
 from pramen_spark.offsets.ledger import OffsetLedger, OffsetRecord, _fold_events
 
 EVENT_SCHEMA = T.StructType(
@@ -81,7 +82,7 @@ class SparkOffsetLedger(OffsetLedger):
 
     def _read_events(self) -> List[dict]:
         try:
-            df = self.spark.read.format(self.data_format).load(self.storage_path)
+            df = load_with_schema(self.spark, self.data_format, self.storage_path, EVENT_SCHEMA)
         except Exception:  # dataset not created yet
             return []
         rows = df.orderBy("seq").collect()

@@ -23,6 +23,7 @@ from typing import Callable, Dict, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pramen_spark.metastore.schema_cache import read_parquet
 from pramen_spark.operators.rowlevel import (
     add_batch_id,
     add_info_date,
@@ -32,35 +33,12 @@ from pramen_spark.operators.rowlevel import (
 from pramen_spark.operators.tsutils import pin_utc, ts_instant
 
 import datetime as _dt
-import os as _os
-
-#: (path, mtime_ns, size) -> StructType. Production engines resolve table
-#: schemas from a catalog/metastore instead of re-sniffing parquet footers
-#: on every query; this cache is that behavior for the path-addressed
-#: testdata tables. Metadata only — the DATA is always scanned from
-#: parquet at execution time — and the stat key invalidates the entry the
-#: moment a file is rewritten, so a changed table re-infers. Measured
-#: cost of footer inference: ~75 ms per spark.read.parquet call vs ~16 ms
-#: with an explicit schema (floor probe, r15); at ~570 load calls per
-#: bench pass the inference was ~10% of the whole suite.
-_SCHEMA_CACHE: dict = {}
-
-
-def _parquet_schema(spark: SparkSession, path: str):
-    st = _os.stat(path)
-    key = (path, st.st_mtime_ns, st.st_size)
-    sch = _SCHEMA_CACHE.get(key)
-    if sch is None:
-        sch = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[key] = sch
-    return sch
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return load_events(spark, sf_dir)
-    path = f"{sf_dir}/{name}.parquet"
-    return spark.read.schema(_parquet_schema(spark, path)).parquet(path)
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def load_documents_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -90,10 +68,7 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     pin_utc(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # schema cached AFTER the nanosAsLong conf is pinned, so the cached
-    # entry is the same StructType every direct inference would produce
-    path = f"{sf_dir}/events.parquet"
-    df = spark.read.schema(_parquet_schema(spark, path)).parquet(path)
+    df = read_parquet(spark, f"{sf_dir}/events.parquet")
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

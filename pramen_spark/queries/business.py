@@ -13,6 +13,7 @@ import datetime as _dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pramen_spark.metastore.schema_cache import parquet_schema
 from pramen_spark.operators.rowlevel import (
     add_batch_id,
     add_info_date,
@@ -23,7 +24,6 @@ from pramen_spark.operators.tsutils import pin_utc, ts_instant
 from pramen_spark.queries.base import (
     QUERIES,
     QuerySpec,
-    _parquet_schema,
     load_documents_spread,
     load_events,
     load_table,
@@ -615,7 +615,7 @@ def q_stream_static_enrich_events(spark, sf_dir):
     )
 
     path = f"{sf_dir}/events.parquet"
-    schema = _parquet_schema(spark, path)
+    schema = parquet_schema(spark, path)
     glob_path = f"{sf_dir}/events.parque[t]"
     stream = read_file_stream(spark, glob_path, schema).withColumn(
         "ts", F.col("ts").cast("timestamp")
@@ -673,7 +673,7 @@ def q_stream_dedup_events(spark, sf_dir):
     )
 
     path = f"{sf_dir}/events.parquet"
-    schema = _parquet_schema(spark, path)
+    schema = parquet_schema(spark, path)
     glob_path = f"{sf_dir}/events.parque[t]"
     stream = read_file_stream(spark, glob_path, schema).withColumn(
         "ts", F.col("ts").cast("timestamp")

@@ -26,6 +26,7 @@ from typing import List
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
+from pramen_spark.metastore.schema_cache import load_with_schema
 from pramen_spark.runner.bookkeeper import Bookkeeper, DataChunk, Journal, JournalEntry
 
 CHUNK_SCHEMA = T.StructType(
@@ -75,9 +76,9 @@ class SparkBookkeeper(Bookkeeper):
         df = self.spark.createDataFrame([row], schema=schema)
         df.coalesce(1).write.format(self.data_format).mode("append").save(path)
 
-    def _read_rows(self, path: str) -> List[dict]:
+    def _read_rows(self, path: str, schema: T.StructType) -> List[dict]:
         try:
-            df = self.spark.read.format(self.data_format).load(path)
+            df = load_with_schema(self.spark, self.data_format, path, schema)
         except Exception:  # dataset not created yet
             return []
         return [row.asDict() for row in df.collect()]
@@ -121,11 +122,12 @@ class SparkBookkeeper(Bookkeeper):
                 job_finished=r["job_finished"],
                 batch_id=r["batch_id"] or 0,
             )
-            for r in self._read_rows(self.records_path)
+            for r in self._read_rows(self.records_path, CHUNK_SCHEMA)
         ]
         chunks.sort(key=lambda c: (c.info_date, c.job_finished))
         schema_rows = sorted(
-            self._read_rows(self.schemas_path), key=lambda r: (r["info_date"], r["updated_at"])
+            self._read_rows(self.schemas_path, SCHEMA_SCHEMA),
+            key=lambda r: (r["info_date"], r["updated_at"]),
         )
         schemas: dict = {}
         for r in schema_rows:
@@ -144,7 +146,7 @@ class SparkBookkeeper(Bookkeeper):
             (self.records_path, CHUNK_SCHEMA),
             (self.schemas_path, SCHEMA_SCHEMA),
         ):
-            rows = self._read_rows(path)  # materialized on the driver
+            rows = self._read_rows(path, schema)  # materialized on the driver
             if not rows:
                 continue
             out = self.spark.createDataFrame(rows, schema=schema)
@@ -206,7 +208,7 @@ class SparkJournal(Journal):
         """All drivers' entries in [from_ts, to_ts] — read from storage, with
         the range predicate pushed to the scan."""
         try:
-            df = self.spark.read.format(self.data_format).load(self.journal_path)
+            df = load_with_schema(self.spark, self.data_format, self.journal_path, JOURNAL_SCHEMA)
         except Exception:  # dataset not created yet
             return []
         rows = (

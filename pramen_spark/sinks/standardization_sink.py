@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from pramen_spark.api import Sink
 from pramen_spark.metastore.persistence import repartition_by_records, write_counted
+from pramen_spark.metastore.schema_cache import read_parquet, remember
 from pramen_spark.sinks.enceladus_sink import build_info_file
 
 DEFAULT_RAW_PATTERN = "{year}/{month}/{day}/v{version}"
@@ -162,10 +163,12 @@ class StandardizationSink(Sink):
             )
             info_dir = publish_base
         else:
+            publish_df = raw_df.drop(*partition_by)
             written = write_counted(
-                raw_df.drop(*partition_by), lambda d: d.write.mode("overwrite").parquet(publish_path)
+                publish_df, lambda d: d.write.mode("overwrite").parquet(publish_path)
             )
-            publish_count = spark.read.parquet(publish_path).count()
+            remember(spark, publish_path, publish_df.schema)
+            publish_count = read_parquet(spark, publish_path).count()
             info_dir = publish_path
         if not raw_base:
             source_count = raw_count = written

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pramen_spark.api import Source
+from pramen_spark.metastore.schema_cache import read_parquet
 
 
 class SparkSource(Source):
@@ -26,6 +27,11 @@ class SparkSource(Source):
     - ``information.date.type``: date | datetime | string
     - ``information.date.format``: java pattern for string-typed columns
     - any ``option.*`` entries are passed to the reader
+
+    A parquet read without a ``schema`` takes the schema from
+    ``metastore.schema_cache``: inferring it is a Spark job, run once per
+    state of the files instead of once per read (the pre-run count read
+    and the run read of each task).
     """
 
     def __init__(self, spark: SparkSession, options: Optional[Dict[str, Any]] = None):
@@ -39,15 +45,17 @@ class SparkSource(Source):
         return bool(self.options.get("has.information.date.column", self.info_date_column))
 
     def _read(self, query: Any) -> DataFrame:
-        reader = self.spark.read.format(self.format)
-        if self.options.get("schema"):
-            reader = reader.schema(self.options["schema"])
-        for k, v in self.options.items():
-            if k.startswith("option."):
-                reader = reader.option(k[len("option.") :], v)
         if isinstance(query, dict) and "table" in query:
             return self.spark.table(query["table"])
         path = query["path"] if isinstance(query, dict) else str(query)
+        reader_options = {
+            k[len("option.") :]: v for k, v in self.options.items() if k.startswith("option.")
+        }
+        if self.format == "parquet" and not self.options.get("schema"):
+            return read_parquet(self.spark, path, reader_options)
+        reader = self.spark.read.format(self.format).options(**reader_options)
+        if self.options.get("schema"):
+            reader = reader.schema(self.options["schema"])
         return reader.load(path)
 
     def _date_col(self) -> F.Column:
